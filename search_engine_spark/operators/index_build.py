@@ -906,8 +906,8 @@ def build_positions(
 def build_hot_bounds(
     postings: DataFrame, salt_threshold: int, theta_k: int = THETA_K
 ) -> DataFrame:
-    """hot_bounds(term_id, docs, tfs, dls): the merged theta sketch for
-    HOT (salted) terms — up to theta_k real postings per term ranked
+    """hot_bounds(term_id, docs, tfs, dls, tf1s, dl1s): the merged theta
+    sketch for HOT (salted) terms — up to theta_k real postings per term ranked
     (tf desc, dl asc) across salt shards. Tiny metadata aggregate: reads
     only the theta_* columns (parquet column pruning), rows = hot terms.
 
@@ -917,19 +917,7 @@ def build_hot_bounds(
     lists are bounded by salt_threshold.
 
     The field channel (tf1, dl1) rides along so weighted queries get a
-    driver theta too. Legacy blob rows without it (pre-upgrade barrels
-    surviving a partial compaction) contribute NULL elements — NOT
-    zero-fill: a zero-filled channel would let the weighted sketch
-    over-state achieved true-BM25F scores. The query side detects any
-    NULL and skips that term's sketch in weighted mode (theta only
-    drops — always safe)."""
-    null_arr = F.transform("theta_docs", lambda x: F.lit(None).cast("long"))
-
-    def chan(col_name: str):
-        if col_name in postings.columns:
-            return F.coalesce(F.col(col_name), null_arr)
-        return null_arr
-
+    driver theta too."""
     pairs = (
         postings.filter(F.col("df") > salt_threshold)
         .select(
@@ -939,8 +927,8 @@ def build_hot_bounds(
                     F.col("theta_docs").alias("doc"),
                     F.col("theta_tfs").alias("tf"),
                     F.col("theta_dls").alias("dl"),
-                    chan("theta_tf1s").alias("tf1"),
-                    chan("theta_dl1s").alias("dl1"),
+                    F.col("theta_tf1s").alias("tf1"),
+                    F.col("theta_dl1s").alias("dl1"),
                 )
             ).alias("p"),
         )
@@ -974,26 +962,51 @@ def read_postings(spark: SparkSession, path: str) -> DataFrame:
     """Read a postings directory, tolerating the empty-corpus case: a
     partitionBy() write of 0 rows creates no data files, so schema
     inference fails — fall back to an empty DataFrame with the canonical
-    schema.
-
-    The per-row ``codec`` id is normalized here: a pre-codec index has no
-    such column (→ varint, 0) and a mixed compaction union may carry
-    NULLs on untouched legacy rows (allowMissingColumns back-fill) — the
-    decode paths always see a non-null int."""
+    schema."""
     try:
-        df = spark.read.parquet(path)
+        return spark.read.parquet(path)
     except Exception:  # AnalysisException: unable to infer schema
         return spark.createDataFrame([], POSTINGS_SCHEMA + ", barrel int")
-    if "codec" not in df.columns:
-        return df.withColumn("codec", F.lit(0).cast("int"))
-    return df.withColumn(
-        "codec", F.coalesce(F.col("codec"), F.lit(0)).cast("int")
-    )
 
 
 def read_stats(spark: SparkSession, out: IndexPaths) -> dict:
     r = spark.read.parquet(out.stats).collect()[0]
     return {k: r[k] for k in r.asDict()}
+
+
+def _ddl_columns(schema: str) -> list[str]:
+    return [c.strip().split(" ")[0] for c in schema.split(",")]
+
+
+# the columns every writer of each table produces (build_index,
+# plans/build_job.py, streaming.incremental.compact and
+# corpus._engine_index all write this format)
+INDEX_FORMAT = {
+    "postings": _ddl_columns(POSTINGS_SCHEMA),
+    "lexicon": ["term", "term_id", "df", "cf", "max_tf", "min_dl"],
+    "stats": _ddl_columns(STATS_SCHEMA),
+    "hot_bounds": ["term_id", "docs", "tfs", "dls", "tf1s", "dl1s"],
+}
+
+
+def check_format(**tables: list[str] | None) -> None:
+    """Reject an index written in an older format: each given table's
+    column list (None = table absent, nothing to check) must hold every
+    column of INDEX_FORMAT. Raises ValueError naming the table and the
+    first missing column. SearchIndex calls this at open and compact()
+    before it rewrites anything, so the query and compaction paths read
+    one format and carry no per-row fallbacks; an older index must be
+    rebuilt."""
+    for table, have in tables.items():
+        if have is None:
+            continue
+        missing = [c for c in INDEX_FORMAT[table] if c not in have]
+        if missing:
+            raise ValueError(
+                f"index {table} table lacks column {missing[0]!r}: it "
+                "predates the current index format — rebuild the index "
+                "with build_index"
+            )
 
 
 _PA_TYPES = {"long": "int64", "double": "float64", "int": "int32"}

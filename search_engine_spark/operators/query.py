@@ -1,41 +1,59 @@
 """BM25 top-k query engine over the compressed barrel index.
 
 Query lifecycle mirrors the reference (SURVEY.md §3.1,
-/root/reference/backend/app.py:363-620):
+/root/reference/backend/app.py:363-620). ONE planner (_plan_topk) runs
+it for every term query:
 
-  1. tokenize query with the SAME normalize pipeline (app.py:376-380)
-  2. bind terms -> term_ids via lexicon; missing terms silently dropped
-     (app.py:392-401)
-  3. partition-pruned postings probe: parquet scan with
-     barrel IN (...) AND term_id IN (...) — the Spark-native version of the
-     reference's `termID // 20000` file arithmetic (app.py:567-572)
-  4. Arrow decode + per-posting BM25 partial scores (numpy), with
-     block-max WAND skipping (replaces MAX_DOCS_TO_PROCESS, app.py:73)
-  5. groupBy(doc_id) ordered sum (union OR-semantics, app.py:594-617;
+  1. bind: tokenize with the SAME normalize pipeline (app.py:376-380) and
+     look the terms up; missing terms are silently dropped (app.py:392-401)
+  2. idf per bound term from the snapshot's df and N
+  3. term bounds: per-term BM25 upper bound from raw (max_tf, min_dl)
+  4. theta: a SAFE lower bound of the final kth score (below)
+  5. scored partials: partition-pruned postings probe (barrel IN (...)
+     AND term_id IN (...) — the Spark-native version of the reference's
+     `termID // 20000` file arithmetic, app.py:567-572), Arrow decode +
+     per-posting BM25 partials (numpy) with block-max WAND skipping
+     (replaces MAX_DOCS_TO_PROCESS, app.py:73)
+  6. ordered per-doc sum (union OR-semantics, app.py:594-617;
      AND-semantics intersection via term-count, SURVEY.md §2.3 J8)
-  6. orderBy(score desc, doc_id asc).limit(k) — Catalyst compiles this to
-     TakeOrderedAndProject, a distributed per-partition-heap top-k.
+  7. orderBy(score desc, doc_id asc).limit(k) — TakeOrderedAndProject,
+     a distributed per-partition-heap top-k.
 
-Float discipline: per-posting scores are computed in numpy float64 via the
-single canonical expression (compression.bm25_score == oracle.bm25_contrib
-shape), idf via math.log on both sides, and the per-doc sum is evaluated in
+The planner reads one of two snapshot views (_View), which differ only
+in data:
+  - base view (search, search_many): the driver-cached lexicon binding,
+    base corpus stats, the lexicon's (max_tf, min_dl) term bounds and the
+    hot-term theta sketches;
+  - union view (search_uncompacted): base ∪ un-compacted ingest deltas —
+    union-lexicon binding, live df/N/avgdl and raw bounds from ONE tagged
+    stats collect, base blobs minus superseded docs ∪ latest-wins delta
+    rows, and no sketch (its base-stats scores do not hold there).
+
+Float discipline: per-posting scores come from one kernel (_Kernel:
+compression.bm25_score / bm25f_score, the oracle.bm25_contrib shape),
+idf via math.log on both sides, and the per-doc sum is evaluated in
 SORTED-TERM-STRING order via aggregate(sort_array(collect_list(...))) — a
 build-independent order (term_ids shift across incremental builds), equal
 to the oracle's ascending-term_id order since oracle ids are term-sorted.
 
-WAND threshold (theta): a SAFE lower bound of the final kth score — the
-kth-largest single-term score among the rarest (lowest-df) query term's
-postings, computed as a distributed TakeOrdered pass (no blobs on the
-driver). Any block b of term t with block_max(b) + sum_{t' != t}
-max_score(t') < theta cannot contain a top-k doc: such a doc's total
-upper bound sits below theta ≤ the true kth score, so neither dropping
-its t-contribution nor its (under-)scored appearance via other terms can
-change the top-k set or its scores — asserted against exhaustive scoring
-in tests/test_wand.py.
+WAND threshold (theta): the kth-largest achieved score among real
+postings — from the driver-side hot-term sketches and/or a distributed
+TakeOrdered pass over the rarest (lowest-df) query term's postings (no
+blobs on the driver). Any block b of term t with block_max(b) +
+sum_{t' != t} max_score(t') < theta cannot contain a top-k doc: such a
+doc's total upper bound sits below theta ≤ the true kth score, so
+neither dropping its t-contribution nor its (under-)scored appearance
+via other terms can change the top-k set or its scores — asserted
+against exhaustive scoring in tests/test_wand.py.
+
+The query path reads only the current index format; SearchIndex rejects
+an older index at open (index_build.check_format).
 """
 
 from __future__ import annotations
 
+import heapq
+from dataclasses import dataclass
 from typing import Iterator
 
 import numpy as np
@@ -50,102 +68,105 @@ from search_engine_spark.functions.compression import (
 )
 from search_engine_spark.operators.index_build import (
     B,
+    DECODE_BASE_COLS,
+    DECODE_BOUND_COLS,
+    DECODE_FIELD_BOUND_COLS,
+    DECODE_TF1_COLS,
     K1,
     IndexPaths,
+    check_format,
     idf_value,
+    read_postings,
     read_stats,
 )
 from search_engine_spark.functions.text import normalize_text
 
+# A lexicon of at most this many rows is collected ONCE into a driver dict
+# at open, making term binding free (no Spark job per query) — the
+# reference keeps its whole lexicon resident the same way (app.py:228).
+# Above it (web scale, 10^8+ terms) binding is a pushed-down IN-filter
+# lexicon scan, one cheap job per query.
+LOCAL_LEXICON_MAX_ROWS = 2_000_000
+
+
+def _query_tokens(query: str | list[str]) -> list[str]:
+    """Sorted distinct query terms. A LIST is treated as ALREADY-NORMALIZED
+    terms and kept verbatim — the path search_corrected needs: lexicon
+    terms are normalize outputs, and the lemmatizer is not idempotent
+    (e.g. 'embed' would re-stem), so re-normalizing a corrected term
+    could silently un-bind it."""
+    if isinstance(query, (list, tuple, set)):
+        return sorted({t for t in query if t})
+    return sorted({t for t in normalize_text(query).split(" ") if t})
+
 
 class SearchIndex:
-    """Handle on a built index: lazily-loaded lexicon slice per query.
+    """Handle on a built index: the base snapshot's tables, corpus stats,
+    hot-term theta sketches and (under LOCAL_LEXICON_MAX_ROWS) the whole
+    lexicon as a driver dict."""
 
-    ``local_lexicon_max_rows``: if the lexicon fits under this row count
-    it is collected ONCE into a driver dict, making term binding free (no
-    Spark job per query) — the reference keeps its whole lexicon resident
-    the same way (app.py:228). At web scale (10^8+ terms) set 0: binding
-    falls back to a pushed-down IN-filter scan, which is one cheap job."""
+    def __init__(self, spark: SparkSession, paths: IndexPaths):
+        import os
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        paths: IndexPaths,
-        local_lexicon_max_rows: int = 2_000_000,
-    ):
-        self.spark = spark
-        self.paths = paths
-        self._local_lexicon_max_rows = local_lexicon_max_rows
         from search_engine_spark.operators.index_build import read_epoch
         from search_engine_spark.streaming.incremental import recover_pending
 
+        self.spark = spark
+        self.paths = paths
         # roll forward a compaction whose journaled swap was interrupted
         # (crash-safe commit: the journal IS the snapshot pointer) — a
         # reader must never open a half-swapped index
         recover_pending(paths)
         self._open_epoch = read_epoch(paths)
         stats = read_stats(spark, paths)
+        self.lexicon = spark.read.parquet(paths.lexicon)
+        self.postings = read_postings(spark, paths.postings)
+        hb_df = (
+            spark.read.parquet(paths.hot_bounds)
+            if os.path.exists(paths.hot_bounds)
+            else None
+        )
+        check_format(
+            postings=self.postings.columns,
+            lexicon=self.lexicon.columns,
+            stats=list(stats),
+            hot_bounds=None if hb_df is None else hb_df.columns,
+        )
         self.n_docs = int(stats["n_docs"])
         self.avgdl = float(stats["avgdl"])
-        # per-field corpus averages for the true-BM25F length norm;
-        # legacy stats (pre-upgrade index) lack them — weighted queries
-        # on such an index fail fast in _decode_score_df instead
-        self.avgdl1 = float(stats.get("avgdl1") or 0.0)
-        self.avgdlb = float(stats.get("avgdlb") or 0.0)
+        # per-field corpus averages for the true-BM25F length norm
+        self.avgdl1 = float(stats["avgdl1"])
+        self.avgdlb = float(stats["avgdlb"])
         self.n_barrels = int(stats["n_barrels"])
-        self.lexicon = spark.read.parquet(paths.lexicon)
-        from search_engine_spark.operators.index_build import read_postings
-
-        self.postings = read_postings(spark, paths.postings)
         self.doc_stats = spark.read.parquet(paths.doc_stats)
         # hot-term theta sketches (tiny: one row per SALTED term) — the
-        # driver-side WAND threshold source for Zipf-head queries
+        # driver-side WAND threshold source for Zipf-head queries.
         # Driver-memory cap: one tiny row (≤THETA_K postings) per HOT term;
         # hot terms are the Zipf head so their count grows ~log with the
         # corpus, but the cap bounds the worst case. An un-loaded hot term
-        # degrades gracefully: _sketch_theta simply contributes nothing
-        # for it (theta stays a valid lower bound) and search() falls back
-        # to the distributed rarest-term pass when the rarest term has no
-        # sketch.
+        # degrades gracefully: its sketch contributes nothing (theta stays
+        # a valid lower bound) and a query whose rarest term it is takes
+        # the distributed theta pass.
         self.hot_bounds: dict[int, tuple] = {}
         max_hot_terms = 200_000
-        import os
-
-        if os.path.exists(paths.hot_bounds):
-            hb_df = spark.read.parquet(paths.hot_bounds)
-
-            def _chan(r, name):
-                # a NULL element marks a pre-upgrade sketch row: the
-                # channel is unusable for that term (weighted theta skips
-                # it — never zero-filled, which could over-state scores)
-                if name not in hb_df.columns:
-                    return None
-                vals = r[name]
-                if vals is None or any(v is None for v in vals):
-                    return None
-                return np.asarray(vals, dtype=np.float64)
-
+        if hb_df is not None:
             for r in hb_df.take(max_hot_terms):
-                self.hot_bounds[int(r["term_id"])] = (
-                    np.asarray(r["docs"], dtype=np.int64),
-                    np.asarray(r["tfs"], dtype=np.float64),
-                    np.asarray(r["dls"], dtype=np.float64),
-                    _chan(r, "tf1s"),
-                    _chan(r, "dl1s"),
+                self.hot_bounds[int(r["term_id"])] = tuple(
+                    np.asarray(r[c], dtype=np.int64 if c == "docs" else np.float64)
+                    for c in ("docs", "tfs", "dls", "tf1s", "dl1s")
                 )
         self._local_lexicon: dict[str, dict] | None = None
-        if local_lexicon_max_rows:
+        if LOCAL_LEXICON_MAX_ROWS:
             # single scan: take(max+1) both sizes the lexicon and fetches
             # it (count()+collect() would scan twice on every open/refresh)
-            rows = self.lexicon.take(local_lexicon_max_rows + 1)
-            if len(rows) <= local_lexicon_max_rows:
-                has_bounds = "max_tf" in self.lexicon.columns
+            rows = self.lexicon.take(LOCAL_LEXICON_MAX_ROWS + 1)
+            if len(rows) <= LOCAL_LEXICON_MAX_ROWS:
                 self._local_lexicon = {
                     r["term"]: {
                         "term_id": int(r["term_id"]),
                         "df": int(r["df"]),
-                        "max_tf": int(r["max_tf"]) if has_bounds else None,
-                        "min_dl": int(r["min_dl"]) if has_bounds else None,
+                        "max_tf": int(r["max_tf"]),
+                        "min_dl": int(r["min_dl"]),
                     }
                     for r in rows
                 }
@@ -154,9 +175,7 @@ class SearchIndex:
         """Re-open after an incremental ingest/compaction changed the
         on-disk tables (the cached driver lexicon would otherwise be
         stale)."""
-        return SearchIndex(
-            self.spark, self.paths, self._local_lexicon_max_rows
-        )
+        return SearchIndex(self.spark, self.paths)
 
     def check_epoch(self) -> None:
         """Raise if compact() rewrote the index since this handle was
@@ -173,24 +192,12 @@ class SearchIndex:
                 "call refresh() for a fresh SearchIndex"
             )
 
-    # -- step 1+2: query terms -> term ids (driver-side; lexicon probe is a
-    # pushed-down IN filter, not a full scan)
     def bind_terms(self, query: str | list[str]) -> dict[int, dict]:
-        """-> {term_id: {df, max_tf, min_dl}} for query terms in the
-        lexicon. The (max_tf, min_dl) term bound rides along with the
-        binding, so WAND needs no extra metadata job over the postings.
-
-        A LIST argument is treated as ALREADY-NORMALIZED terms and looked
-        up verbatim — the path search_corrected needs: lexicon terms are
-        normalize outputs, and the lemmatizer is not idempotent (e.g.
-        'embed' would re-stem), so re-normalizing a corrected term could
-        silently un-bind it."""
-        if isinstance(query, (list, tuple, set)):
-            tokens = sorted({t for t in query if t})
-        else:
-            tokens = sorted(
-                {t for t in normalize_text(query).split(" ") if t}
-            )
+        """-> {term_id: {term, df, max_tf, min_dl}} for query terms in the
+        base lexicon (a list is bound verbatim — _query_tokens). The
+        (max_tf, min_dl) term bound rides along with the binding, so WAND
+        needs no extra metadata job over the postings."""
+        tokens = _query_tokens(query)
         if not tokens:
             return {}
         if self._local_lexicon is not None:
@@ -202,24 +209,138 @@ class SearchIndex:
                 for t in tokens
                 if (e := self._local_lexicon.get(t)) is not None
             }
-        cols = ["term", "term_id", "df"]
-        has_bounds = "max_tf" in self.lexicon.columns
-        if has_bounds:
-            cols += ["max_tf", "min_dl"]
         rows = (
             self.lexicon.filter(F.col("term").isin(tokens))
-            .select(*cols)
+            .select("term", "term_id", "df", "max_tf", "min_dl")
             .collect()
         )
         return {
             int(r["term_id"]): {
                 "term": r["term"],
-                "df": int(r["df"]),
-                "max_tf": int(r["max_tf"]) if has_bounds else None,
-                "min_dl": int(r["min_dl"]) if has_bounds else None,
+                **{k: int(r[k]) for k in ("df", "max_tf", "min_dl")},
             }
             for r in rows
         }
+
+
+# --- the top-k planner ----------------------------------------------------
+
+
+@dataclass
+class _View:
+    """One snapshot the planner scores. ``bound`` maps each bound query
+    term_id -> {term, df, max_tf, min_dl} under THIS snapshot's df and
+    raw bound extrema; ``stats`` = (avgdl, avgdl1, avgdlb). ``superseded``
+    (docs whose base postings a delta version replaces) and
+    ``delta_rows`` (their latest-wins postings) are set together, by the
+    union view only."""
+
+    bound: dict[int, dict]
+    n_docs: int
+    stats: tuple[float, float, float]
+    probe: DataFrame
+    sketch: dict[int, tuple]
+    superseded: DataFrame | None = None
+    delta_rows: DataFrame | None = None
+
+    def idfs(self) -> dict[int, float]:
+        return {t: idf_value(b["df"], self.n_docs) for t, b in self.bound.items()}
+
+
+class _Kernel:
+    """The per-posting score — BM25, or TRUE BM25F (Robertson/Zaragoza
+    simple BM25F, compression.bm25f_score) when ``field_weights`` =
+    (w_title, w_body) is set — bound to a view's corpus averages: the one
+    place the query path picks between the two. Shipped (pickled) to the
+    executors by the decode and delta-scoring UDFs."""
+
+    def __init__(
+        self,
+        stats: tuple[float, float, float],
+        field_weights: tuple[float, float] | None,
+    ):
+        self.avgdl, avgdl1, avgdlb = stats
+        # a field absent corpus-wide has average length 0 and tf
+        # identically 0: guard to 1.0 so its dead term is 0, not NaN (the
+        # oracle and the SQL apply the same guard)
+        self.avgdl1, self.avgdlb = avgdl1 or 1.0, avgdlb or 1.0
+        self.fw = field_weights
+        # column pruning BELOW the Arrow boundary: mapInPandas ships every
+        # input column to Python, so only the consumed streams are
+        # selected (the select also prunes the parquet scan); the field
+        # channel decodes only in weighted mode
+        self.blob_cols = DECODE_BASE_COLS + DECODE_BOUND_COLS + (
+            DECODE_FIELD_BOUND_COLS + DECODE_TF1_COLS if self.fw else []
+        )
+        # the score() inputs a delta row carries, in argument order
+        self.score_cols = ["tf", "dl"] + (["tf1", "dl1"] if self.fw else [])
+
+    def score(self, idf, tf, dl, tf1=None, dl1=None) -> np.ndarray:
+        """Per-posting partials; BM25F normalizes each field's tf by its
+        own field length against the field's corpus average, then the
+        weighted sum saturates once."""
+        if self.fw is None:
+            return bm25_score(tf, dl, idf, self.avgdl, K1, B)
+        w_t, w_b = self.fw
+        return bm25f_score(
+            tf1, tf - tf1, dl1, dl - dl1, idf, w_t, w_b,
+            self.avgdl1, self.avgdlb, K1, B,
+        )
+
+    def block_bound(self, idf: float, row) -> np.ndarray:
+        """Per-block upper bound from a blob row's monotone summaries
+        (compression.block_summaries) under live idf/avgdl — exact even
+        after incremental updates. BM25F uses the per-field extrema:
+        tfn is increasing in each field tf and decreasing in each field
+        length, so bm25f(max_tf1, max_tf, min_dl1, min_dlb) bounds every
+        posting in the block (body tf ≤ tf)."""
+        mt = np.asarray(row.block_max_tf, dtype=np.float64)
+        if self.fw is None:
+            md = np.asarray(row.block_min_dl, dtype=np.float64)
+            return bm25_score(mt, md, idf, self.avgdl, K1, B)
+        w_t, w_b = self.fw
+        return bm25f_score(
+            np.asarray(row.block_max_tf1, dtype=np.float64), mt,
+            np.asarray(row.block_min_dl1, dtype=np.float64),
+            np.asarray(row.block_min_dlb, dtype=np.float64),
+            idf, w_t, w_b, self.avgdl1, self.avgdlb, K1, B,
+        )
+
+    def term_bound(self, idf: float, max_tf: int, min_dl: int) -> float:
+        """Upper bound of the term's score over all its postings;
+        max_tf <= 0 means the term has no postings in the view (e.g. a
+        full-merge compaction tombstoned every one: the lexicon keeps the
+        term with df 0 and max_tf 0), bound 0. BM25F has no per-field
+        term extrema:
+        with each field's normalizer floored at (1−b) and both field tfs
+        ≤ max_tf, tfn ≤ (w_t + w_b)·max_tf/(1−b), and the saturated score
+        is increasing in tfn — looser than the block bound, which it only
+        gates."""
+        if max_tf <= 0:
+            return 0.0
+        if self.fw is None:
+            return float(
+                bm25_score(
+                    np.array([float(max_tf)]), np.array([float(min_dl)]),
+                    idf, self.avgdl, K1, B,
+                )[0]
+            )
+        w_t, w_b = self.fw
+        tfn = (w_t + w_b) * float(max_tf) / (1.0 - B)
+        return idf * (tfn * (K1 + 1.0)) / (tfn + K1)
+
+    def decode(self, row, keep) -> tuple[np.ndarray, ...]:
+        """(doc_id, tf, dl[, tf1, dl1]) of the kept blocks; pruned blocks
+        are never DECOMPRESSED — the per-block byte-length tables make
+        skipping pure offset arithmetic."""
+        field = (
+            (row.tf1s, row.tf1_lens, row.dls1, row.dl1_lens) if self.fw else ()
+        )
+        return decode_posting_blocks(
+            row.doc_deltas, row.tfs, row.dls,
+            row.db_lens, row.tf_lens, row.dl_lens, keep, *field,
+            codec=int(row.codec),
+        )
 
 
 def _probe(index: SearchIndex, term_ids: list[int]) -> DataFrame:
@@ -230,539 +351,57 @@ def _probe(index: SearchIndex, term_ids: list[int]) -> DataFrame:
     )
 
 
-def _decode_score_df(
-    index: SearchIndex,
-    probe: DataFrame,
-    idfs: dict[int, float],
-    theta: float,
-    other_max: dict[int, float],
-    ranks: dict[int, int] | None = None,
-    field_weights: tuple[float, float] | None = None,
-    stats: tuple[float, float, float] | None = None,
-) -> DataFrame:
-    """mapInPandas: blob rows -> (doc_id, rank, score) with block-max
-    skipping. other_max[t] = sum of max_score over the OTHER query terms.
-    ``stats`` = (avgdl, avgdl1, avgdlb) overrides the index's base-snapshot
-    corpus averages — the freshness window (search_uncompacted) scores and
-    bounds under LIVE union statistics; None keeps the base stats.
-    ``ranks`` maps term_id -> the term's position in SORTED-BY-STRING
-    query-term order — a build-independent key for the deterministic
-    per-doc float sum (term_ids are NOT stable across incremental builds:
-    new terms append at max_id+1, so summing in term_id order would
-    diverge from a fresh build in the last ulp for 3+-term queries).
-
-    ``field_weights`` = (w_title, w_body) switches to TRUE BM25F
-    (compression.bm25f_score): each field's tf is normalized by its own
-    field length against the field's corpus average, then the weighted
-    sum saturates once — the tf1 + dl1 streams decode only in this mode.
-    The per-block upper bound uses the per-field extrema
-    (block_max_tf1, block_min_dl1, block_min_dlb): tfn is increasing in
-    each field tf and decreasing in each field length, so
-    bm25f(max_tf1, max_tf, min_dl1, min_dlb) bounds every posting in the
-    block (body tf ≤ tf, so block_max_tf bounds it)."""
-    # guard zero per-field averages to 1.0 (field absent corpus-wide ⇒
-    # its tf is identically 0; the guard prevents NaN, the same guard the
-    # oracle and the SQL apply)
-    if stats is not None:
-        avgdl, avgdl1, avgdlb = stats
-        avgdl1 = avgdl1 or 1.0
-        avgdlb = avgdlb or 1.0
-    else:
-        avgdl = index.avgdl
-        avgdl1 = index.avgdl1 or 1.0
-        avgdlb = index.avgdlb or 1.0
-    ranks = ranks or {}
-    fw = field_weights
-    # column pruning BELOW the Arrow boundary: mapInPandas ships every
-    # column of its input to Python, so an unpruned probe would transfer
-    # the theta sketch arrays and (in unweighted mode) the field streams
-    # for nothing — and the select also prunes the parquet scan itself
-    from search_engine_spark.operators.index_build import (
-        DECODE_BASE_COLS,
-        DECODE_BOUND_COLS,
-        DECODE_FIELD_BOUND_COLS,
-        DECODE_TF1_COLS,
-    )
-
-    cols = DECODE_BASE_COLS + DECODE_BOUND_COLS
-    if fw is not None:
-        if "dls1" not in probe.columns:
-            raise ValueError(
-                "field-weighted search needs the per-field length stream "
-                "(dls1) — rebuild or compact this index with the current "
-                "version"
-            )
-        cols = cols + DECODE_FIELD_BOUND_COLS + DECODE_TF1_COLS
-    probe = probe.select(*cols)
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_doc, out_rank, out_score = [], [], []
-            for row in pdf.itertuples(index=False):
-                tid = int(row.term_id)
-                cid = int(row.codec)
-                idf = idfs[tid]
-                # per-block upper bound from the monotone summaries, with
-                # LIVE idf/avgdl — exact even after incremental updates
-                # (compression.block_summaries)
-                mt = np.asarray(row.block_max_tf, dtype=np.float64)
-                md = np.asarray(row.block_min_dl, dtype=np.float64)
-                if fw is not None:
-                    if row.dls1 is None:
-                        raise ValueError(
-                            "mixed-format barrel: a posting row lacks the "
-                            "per-field length stream — run compact() to "
-                            "upgrade it before field-weighted search"
-                        )
-                    w_t, w_b = fw
-                    mt1 = np.asarray(row.block_max_tf1, dtype=np.float64)
-                    md1 = np.asarray(row.block_min_dl1, dtype=np.float64)
-                    mdb = np.asarray(row.block_min_dlb, dtype=np.float64)
-                    bm = bm25f_score(
-                        mt1, mt, md1, mdb, idf, w_t, w_b, avgdl1, avgdlb,
-                        K1, B,
-                    )
-                else:
-                    bm = bm25_score(mt, md, idf, avgdl, K1, B)
-                if theta > 0.0:
-                    # prune against theta RELAXED by the 6-dp rounding
-                    # quantum: the final top-k orders by round(score, 6),
-                    # so a doc whose raw total sits within 5e-7 below
-                    # theta can round-TIE the kth score and win the
-                    # doc_id tiebreak — pruning it would diverge from the
-                    # oracle exactly at the tie boundaries the rounded
-                    # ordering was introduced to stabilize
-                    keep = bm + other_max.get(tid, 0.0) >= theta - 5e-7
-                    if not keep.any():
-                        continue
-                else:
-                    keep = None  # decode all blocks
-                # pruned blocks are never DECOMPRESSED — the per-block
-                # byte-length tables make skipping pure offset arithmetic
-                if fw is not None:
-                    d, t, l, t1, d1 = decode_posting_blocks(
-                        row.doc_deltas, row.tfs, row.dls,
-                        row.db_lens, row.tf_lens, row.dl_lens, keep,
-                        row.tf1s, row.tf1_lens, row.dls1, row.dl1_lens,
-                        codec=cid,
-                    )
-                    score = bm25f_score(
-                        t1, t - t1, d1, l - d1, idf, w_t, w_b,
-                        avgdl1, avgdlb, K1, B,
-                    )
-                else:
-                    d, t, l = decode_posting_blocks(
-                        row.doc_deltas, row.tfs, row.dls,
-                        row.db_lens, row.tf_lens, row.dl_lens, keep,
-                        codec=cid,
-                    )
-                    score = bm25_score(t, l, idf, avgdl, K1, B)
-                out_doc.append(d)
-                out_rank.append(
-                    np.full(len(d), ranks.get(tid, tid), dtype=np.int64)
-                )
-                out_score.append(score)
-            if out_doc:
-                yield pd.DataFrame(
-                    {
-                        "doc_id": np.concatenate(out_doc),
-                        "rank": np.concatenate(out_rank),
-                        "score": np.concatenate(out_score),
-                    }
-                )
-
-    return probe.mapInPandas(decode, schema="doc_id long, rank long, score double")
-
-
-def _estimate_theta(
-    index: SearchIndex,
-    probe: DataFrame,
-    rarest: int,
-    idfs: dict[int, float],
-    k: int,
-    field_weights: tuple[float, float] | None = None,
-    doc_ids: DataFrame | None = None,
-) -> float:
-    """Distributed pass-1: kth-largest BM25 score among the RAREST query
-    term's postings — a SAFE lower bound on the true kth top-k score (k
-    docs achieve at least their rarest-term contribution, and scores are
-    non-negative, so the true kth total ≥ this theta).
-
-    With a metadata ``doc_ids`` filter the pass applies the SAME
-    semi-join below the top-k: theta must lower-bound the kth FILTERED
-    score (an unfiltered theta could exceed it and over-prune).
-
-    Runs as orderBy(desc).limit(k) over the decoded rarest-term postings —
-    TakeOrderedAndProject, per-partition heaps; NO posting blobs ever reach
-    the driver (the previous design collected every query term's blobs
-    driver-side, which breaks at Zipf-head posting-list sizes)."""
-    scored = _decode_score_df(
-        index, probe.filter(F.col("term_id") == F.lit(rarest)), idfs, 0.0, {},
-        field_weights=field_weights,
-    )
-    if doc_ids is not None:
-        scored = scored.join(
-            F.broadcast(doc_ids.select("doc_id")), "doc_id", "left_semi"
-        )
-    rows = scored.select("score").orderBy(F.desc("score")).limit(k).collect()
-    if len(rows) < k:
-        return 0.0
-    return float(rows[-1]["score"])
-
-
-def _sketch_theta(
-    index: SearchIndex,
-    term_ids: list[int],
-    idfs: dict[int, float],
-    k: int,
-    field_weights: tuple[float, float] | None = None,
-) -> float:
-    """Driver-side theta from the hot-term sketches: accumulate ACHIEVED
-    BM25 partial sums per doc over every query term's stored real
-    postings (live idf/avgdl), take the kth largest. Zero Spark jobs.
-
-    Safe: each stored (doc, tf, dl) is a real posting, so each per-doc
-    sum is ≤ that doc's true total score; k distinct docs achieving
-    ≥ theta ⇒ the true kth top-k score ≥ theta.
-
-    With field_weights the achieved score uses the SAME true-BM25F
-    per-field norm the decode scores with (the sketch stores the real
-    (tf1, dl1) channel per posting). A sketch whose field channel is
-    NULL (pre-upgrade rows — build_hot_bounds preserves the null rather
-    than zero-filling, which could over-state achieved scores) is
-    skipped: theta only drops, staying a valid lower bound."""
-    acc: dict[int, float] = {}
-    for tid in term_ids:
-        hb = index.hot_bounds.get(tid)
-        if hb is None:
-            continue
-        d, tf, dl, tf1, dl1 = hb
-        if field_weights is not None:
-            if tf1 is None or dl1 is None:
-                continue
-            w_t, w_b = field_weights
-            score = bm25f_score(
-                tf1, tf - tf1, dl1, dl - dl1, idfs[tid], w_t, w_b,
-                index.avgdl1 or 1.0, index.avgdlb or 1.0, K1, B,
-            )
-        else:
-            score = bm25_score(tf, dl, idfs[tid], index.avgdl, K1, B)
-        for doc, sc in zip(d.tolist(), score.tolist()):
-            acc[doc] = acc.get(doc, 0.0) + sc
-    if len(acc) < k:
-        return 0.0
-    import heapq
-
-    return heapq.nlargest(k, acc.values())[-1]
-
-
-def _probe_term_bounds(
-    probe: DataFrame,
-    idfs: dict[int, float],
-    avgdl: float,
-    field_weights: tuple[float, float] | None = None,
-) -> dict[int, float]:
-    """Fallback per-term upper bounds via a probe metadata aggregate (for
-    indexes whose lexicon lacks max_tf/min_dl, or terms whose postings
-    were fully tombstoned). Under true-BM25F field weighting the safe
-    term bound uses the B_f ≥ (1−b) floor: tfn = w_t·tf1/B1 + w_b·tfb/B0
-    ≤ (w_t + w_b)·max_tf/(1−b) (each field tf ≤ tf) — forgetting this
-    would under-estimate other_max and over-prune (lossy weighted
-    top-k)."""
-    out = {}
-    for r in (
-        probe.groupBy("term_id")
-        .agg(F.max("max_tf").alias("mt"), F.min("min_dl").alias("md"))
-        .collect()
-    ):
-        tid = int(r["term_id"])
-        if field_weights is not None:
-            out[tid] = _weighted_term_bound(
-                float(r["mt"]), idfs[tid], field_weights
-            )
-        else:
-            mt = np.array([float(r["mt"])])
-            md = np.array([float(r["md"])])
-            out[tid] = float(bm25_score(mt, md, idfs[tid], avgdl, K1, B)[0])
-    return out
-
-
-def _weighted_term_bound(
-    max_tf: float, idf: float, field_weights: tuple[float, float]
-) -> float:
-    """Safe term-level upper bound for true-BM25F scoring: with each
-    field's normalizer floored at (1−b) and both field tfs ≤ max_tf,
-    tfn ≤ (w_t + w_b)·max_tf/(1−b); the saturated score is increasing in
-    tfn. Looser than the per-block bound (which has real per-field
-    extrema) — it only gates which BLOCKS get the tight check."""
-    w_t, w_b = field_weights
-    tfn = (w_t + w_b) * max_tf / (1.0 - B)
-    return idf * (tfn * (K1 + 1.0)) / (tfn + K1)
-
-
-def search(
-    index: SearchIndex,
-    query: str | list[str],
-    k: int = 10,
-    mode: str = "OR",
-    use_wand: bool = True,
-    field_weights: tuple[float, float] | None = None,
-    doc_ids: DataFrame | None = None,
-) -> DataFrame:
-    """-> DataFrame(doc_id, score) top-k, ordered (score desc, doc_id asc).
-
-    mode="OR": reference union semantics. mode="AND": posting-list
-    intersection (north rule).
-
-    field_weights=(w_title, w_body): TRUE BM25F scoring (Robertson/
-    Zaragoza simple BM25F — compression.bm25f_score) over the postings'
-    (tf1, dl1) field channel: each field's tf is normalized by its own
-    field length against the field's corpus average, then the weighted
-    sum saturates once. The reference scores every search with per-field
-    weights (app.py:75-92,679-725); idf stays corpus-global (per the
-    literature), mirrored by the declarative bm25f_topk oracle.
-
-    doc_ids: optional DataFrame with a doc_id column — a metadata filter
-    (reference app.py:407-497 composes location/class filters inside the
-    query) applied as a broadcast semi-join BELOW scoring: filtered docs
-    never enter the per-doc aggregation, and the WAND theta is estimated
-    on the FILTERED candidate set (an unfiltered theta could over-prune).
-    Term stats stay corpus-global, like the reference.
-
-    Top-k ordering key is the 6-dp ROUNDED score (doc_id tiebreak) — the
-    same key every declarative/DuckDB oracle orders by — while the
-    returned ``score`` column stays the raw float64 (bit-equal to the
-    single-node oracle). Ordering by the raw float would let two docs
-    whose scores round equal straddle rank k differently across
-    engines."""
-    index.check_epoch()
-    spark = index.spark
-    bound = index.bind_terms(query)
+def _base_view(index: SearchIndex, bound: dict[int, dict]) -> _View | None:
+    """The base snapshot: what the index handle caches."""
     if not bound:
-        return spark.createDataFrame([], "doc_id long, score double")
-    term_ids = sorted(bound)
-    idfs = {tid: idf_value(b["df"], index.n_docs) for tid, b in bound.items()}
-
-    probe = _probe(index, term_ids)
-    theta = 0.0
-    other_max: dict[int, float] = {}
-    if use_wand and len(term_ids) > 1 and mode == "OR":
-        # per-term global upper bound from the lexicon's (max_tf, min_dl)
-        # term bounds — no metadata job; bound uses live idf/avgdl
-        maxes = {}
-        for tid in term_ids:
-            mt = bound[tid]["max_tf"]
-            md = bound[tid]["min_dl"]
-            if mt is None or md is None or mt <= 0:
-                # lexicon without term bounds, or a term whose postings
-                # were fully tombstoned (df=0 after a full-merge
-                # compaction): fall back to a probe metadata aggregate
-                # (weight-aware — see _probe_term_bounds)
-                maxes = _probe_term_bounds(
-                    probe, idfs, index.avgdl, field_weights
-                )
-                break
-            if field_weights is not None:
-                # lexicon stores only max_tf: use the (1−b)-floored
-                # true-BM25F term bound (block-level bounds are tighter
-                # via the per-field block extrema)
-                maxes[tid] = _weighted_term_bound(
-                    float(mt), idfs[tid], field_weights
-                )
-            else:
-                maxes[tid] = float(
-                    bm25_score(
-                        np.array([float(mt)]), np.array([float(md)]),
-                        idfs[tid], index.avgdl, K1, B,
-                    )[0]
-                )
-        other_max = {
-            tid: sum(v for t2, v in maxes.items() if t2 != tid)
-            for tid in term_ids
-        }
-        rarest = min(bound, key=lambda t: (bound[t]["df"], t))
-        # the driver sketch serves unweighted AND weighted queries (its
-        # real (tf1, dl1) channel reproduces the decode's true-BM25F
-        # scores exactly; pre-upgrade sketch rows carry NULL channels and
-        # are skipped per term — _sketch_theta). FILTERED queries can't
-        # use it: the sketch ignores the doc_ids set, so its kth achieved
-        # score may exceed the kth FILTERED score and over-prune — they
-        # keep the distributed rarest-term pass, which scores real
-        # filtered postings.
-        sketch_ok = doc_ids is None
-        if sketch_ok:
-            theta = _sketch_theta(index, term_ids, idfs, k, field_weights)
-            if rarest not in index.hot_bounds:
-                # cold rarest term: its list is bounded by salt_threshold,
-                # so the distributed pass is cheap — and usually tighter
-                theta = max(
-                    theta,
-                    _estimate_theta(
-                        index, probe, rarest, idfs, k,
-                        field_weights=field_weights,
-                    ),
-                )
-        else:
-            theta = _estimate_theta(
-                index, probe, rarest, idfs, k,
-                field_weights=field_weights, doc_ids=doc_ids,
-            )
-
-    # per-doc sum in SORTED-TERM-STRING order: matches the oracle (its ids
-    # are sorted by term) and is identical across batch/incremental builds
-    ranks = {
-        tid: i
-        for i, tid in enumerate(
-            sorted(term_ids, key=lambda t: bound[t]["term"])
-        )
-    }
-    scored = _decode_score_df(
-        index, probe, idfs, theta, other_max, ranks,
-        field_weights=field_weights,
-    )
-    if doc_ids is not None:
-        # metadata filter below the aggregation: pruned docs never enter
-        # the per-doc sum or the top-k heaps
-        scored = scored.join(
-            F.broadcast(doc_ids.select("doc_id")), "doc_id", "left_semi"
-        )
-    return _sum_topk(scored, len(term_ids), mode, k)
-
-
-def _sum_topk(scored: DataFrame, n_bound: int, mode: str, k: int) -> DataFrame:
-    """(doc_id, rank, score) partials -> ordered top-k: per-doc sum in
-    rank order (build-independent, oracle-bit-equal — see search()),
-    AND-mode term-count intersection, TakeOrderedAndProject on the 6-dp
-    rounded key."""
-    per_doc = scored.groupBy("doc_id").agg(
-        F.sort_array(F.collect_list(F.struct("rank", "score"))).alias("parts")
-    )
-    total = per_doc.select(
-        "doc_id",
-        F.aggregate(
-            "parts", F.lit(0.0), lambda acc, x: acc + x["score"]
-        ).alias("score"),
-        F.size("parts").alias("n_terms"),
-    )
-    if mode == "AND":
-        total = total.filter(F.col("n_terms") == n_bound)
-    return (
-        total.select("doc_id", "score")
-        .orderBy(F.desc(F.round("score", 6)), F.asc("doc_id"))
-        .limit(k)
+        return None
+    return _View(
+        bound, index.n_docs, (index.avgdl, index.avgdl1, index.avgdlb),
+        _probe(index, sorted(bound)), index.hot_bounds,
     )
 
 
-def search_uncompacted(
-    index: SearchIndex,
-    query: str,
-    k: int = 10,
-    mode: str = "OR",
-    field_weights: tuple[float, float] | None = None,
-    doc_ids: DataFrame | None = None,
-    use_wand: bool = True,
-) -> DataFrame:
-    """BM25 term search over the UNION corpus (base ∪ un-compacted ingest
-    deltas) — the term-side twin of search_phrase's union snapshot,
-    closing the freshness asymmetry where term queries served exactly the
-    base snapshot until compact().
+def _union_view(index: SearchIndex, snap: dict, query: str) -> _View | None:
+    """The union corpus (base ∪ un-compacted ingest deltas) under LIVE
+    stats. df per term is counted live — base df from the blob metadata
+    (Σ n_docs) minus the delta-superseded docs present in the term's base
+    list (a doc-id-only decode pass, tf/dl streams untouched) plus the
+    latest-wins delta rows; N/avgdl (and the per-field averages) come from
+    uncompacted_snapshot's exact-int fold. The raw (max_tf, min_dl) term
+    bound extrema span base metadata ∪ delta rows (raw extrema are
+    stats-independent; the planner scores them with live idf/avgdl).
 
-    Exactness: df per term is counted live — base df from the blob
-    metadata (Σ n_docs) minus the delta-superseded docs present in the
-    term's base list (a doc-id-only decode pass, tf/dl streams untouched)
-    plus the latest-wins delta rows; N/avgdl (and the per-field averages
-    for BM25F) come from uncompacted_snapshot's exact-int fold; every
-    posting is scored by the SAME canonical numpy kernel the compacted
-    decode uses — so results are bit-equal to compact() + search()
-    (tests/test_streaming).
-
-    Delta-aware WAND (round 4, VERDICT r3 #6): the base-stats theta
-    sketches and lexicon term bounds are UNUSABLE here (a changed
-    N/avgdl/df moves every bound), so this path recomputes everything
-    under LIVE union stats driver-side: per-term score bounds from the
-    blob metadata extrema ∪ delta extrema (raw max_tf/min_dl are
-    stats-independent, the score bound is evaluated with live idf/avgdl —
-    valid by BM25 monotonicity), theta from the kth-best live score of
-    the rarest term's union rows (the standard safe lower bound), pruning
-    relaxed by the 6-dp rounding quantum exactly like the compacted
-    decode. Skipped blocks are never decompressed. A metadata doc_ids
-    filter applies the same semi-join inside the theta pass (an
-    unfiltered theta could over-prune — search()'s caveat).
-
-    Cost model: ONE tiny driver stats job (round 5, VERDICT r4 #6 — the
-    metadata agg over ≤ a few blob rows/term, the superseded-overlap
-    count via the id-only decode, and the delta per-term stats union
-    into a single tagged collect) plus the rarest-term theta pass buy
-    block skipping on the dominant base decode; delta rows are small by
-    construction and always score. compact() restores the sketch-served
-    zero-job path. Latest-version-wins: base scores of re-ingested or
-    tombstoned docs are anti-joined out on the (broadcast, tiny) delta
-    doc set, exactly like the positional path.
-
-    Corner: a term whose postings are ALL tombstoned but not yet
-    compacted still binds here (df 0 after the anti-join, contributes no
-    rows); in AND mode it empties the result until compact() drops it
-    from the lexicon — the conservative reading of an in-flux corpus."""
-    index.check_epoch()
-    spark = index.spark
+    The three tiny per-term aggregates — blob metadata, superseded
+    overlap, delta stats — union into one tagged frame and reach the
+    driver in ONE collect (tests/test_streaming.py pins the job count)."""
     from search_engine_spark.streaming import incremental as inc
 
-    snap = inc.uncompacted_snapshot(spark, index.paths)
-    if snap is None:
-        return search(
-            index, query, k=k, mode=mode, field_weights=field_weights,
-            doc_ids=doc_ids,
-        )
-    tokens = sorted({t for t in normalize_text(query).split(" ") if t})
-    empty = spark.createDataFrame([], "doc_id long, score double")
+    tokens = _query_tokens(query)
     if not tokens:
-        return empty
+        return None
     # bind via the base ∪ delta lexicon (new terms must bind; the cached
     # driver lexicon is stale while deltas exist)
-    bound = {
+    terms = {
         int(r["term_id"]): r["term"]
         for r in snap["lexicon"]
         .filter(F.col("term").isin(tokens))
         .select("term", "term_id")
         .collect()
     }
-    if not bound:
-        return empty
-    term_ids = sorted(bound)
-    ranks = {
-        tid: i
-        for i, tid in enumerate(sorted(term_ids, key=lambda t: bound[t]))
-    }
+    if not terms:
+        return None
+    term_ids = sorted(terms)
     # postings-delta torn-log guard (the term-side analogue of the
     # positional guard) — owned by the delta-log layer
     inc.check_postings_log(index.paths)
-    cols = ["term_id", "doc_id", "tf", "tf1", "dl", "dl1"]
     probe = _probe(index, term_ids)
-    if field_weights is not None and "dls1" not in probe.columns:
-        raise ValueError(
-            "field-weighted search needs the per-field length stream "
-            "(dls1) — rebuild or compact this index with the current "
-            "version"
-        )
-    n_docs, avgdl = snap["n_docs"], snap["avgdl"]
-    live_stats = (avgdl, snap["avgdl1"] or 1.0, snap["avgdlb"] or 1.0)
-    fw = field_weights
-
-    # ---- live per-term stats, driver-side, in ONE Spark job (round 5,
-    # VERDICT r4 #6 — was three collects, tripling the per-query
-    # scheduling floor in the freshness window): the three tiny
-    # aggregates — base df + raw bound extrema from blob METADATA (no
-    # payload decode), the delta-superseded overlap per term's base list
-    # (doc-id-only decode; payload streams stay in parquet), and the
-    # latest-wins delta per-term stats — union into one tagged frame and
-    # one collect (tests/test_streaming.py pins the job count).
     deltas = inc._read_deltas_with_seq(
-        spark, index.paths, inc.delta_dir(index.paths)
+        index.spark, index.paths, inc.delta_dir(index.paths)
     )
     delta_rows = (
         inc._latest_per_doc(deltas)
         .filter(F.col("term_id").isin(term_ids))
-        .select(*cols)
+        .select("term_id", "doc_id", "tf", "tf1", "dl", "dl1")
         .localCheckpoint(eager=False)
     )
     lc = lambda c: F.col(c).cast("long")  # noqa: E731 — union type align
@@ -799,139 +438,359 @@ def search_uncompacted(
             )
         )
     )
-    meta: dict[int, tuple[int, int, int]] = {}
-    overlap: dict[int, int] = {}
-    dstats: dict[int, tuple[int, int, int]] = {}
+    df = dict.fromkeys(term_ids, 0)
+    max_tf = dict.fromkeys(term_ids, 0)
+    min_dls: dict[int, list[int]] = {t: [] for t in term_ids}
     for r in stats_frame.collect():
         tid = int(r["term_id"])
-        if r["src"] == "meta":
-            meta[tid] = (int(r["a"]), int(r["b"]), int(r["c"]))
-        elif r["src"] == "overlap":
-            overlap[tid] = int(r["a"])
-        else:
-            dstats[tid] = (int(r["a"]), int(r["b"]), int(r["c"]))
-    live_df = {
-        tid: meta.get(tid, (0, 0, 0))[0]
-        - overlap.get(tid, 0)
-        + dstats.get(tid, (0, 0, 0))[0]
-        for tid in term_ids
+        if r["src"] == "overlap":
+            df[tid] -= int(r["a"])
+            continue
+        df[tid] += int(r["a"])
+        max_tf[tid] = max(max_tf[tid], int(r["b"]))
+        min_dls[tid].append(int(r["c"]))
+    bound = {
+        t: {
+            "term": terms[t], "df": df[t], "max_tf": max_tf[t],
+            "min_dl": min(min_dls[t], default=1),
+        }
+        for t in term_ids
     }
-    idfs = {tid: idf_value(live_df[tid], n_docs) for tid in term_ids}
+    return _View(
+        bound, snap["n_docs"], (snap["avgdl"], snap["avgdl1"], snap["avgdlb"]),
+        probe, {}, snap["delta_doc_ids"], delta_rows,
+    )
 
-    rank_map = dict(ranks)
 
-    def _score_delta(rows: DataFrame, tids: list[int]) -> DataFrame:
-        """Latest-wins delta rows -> (doc_id, rank, score) under live
-        stats, same numpy kernels as the base decode."""
-        live_avgdl, live_avgdl1, live_avgdlb = live_stats
-        score_cols = ["term_id", "doc_id", "tf", "dl"] + (
-            ["tf1", "dl1"] if fw is not None else []
-        )
-        idf_map = {t: idfs[t] for t in tids}
+def _term_ranks(bound: dict[int, dict]) -> dict[int, int]:
+    """term_id -> the term's position in SORTED-BY-STRING order: the
+    build-independent key for the deterministic per-doc float sum
+    (term_ids are NOT stable across incremental builds — new terms append
+    at max_id+1 — so summing in term_id order would diverge from a fresh
+    build in the last ulp for 3+-term queries)."""
+    return {
+        tid: i for i, tid in enumerate(sorted(bound, key=lambda t: bound[t]["term"]))
+    }
 
-        def score_rows(
-            batches: Iterator[pd.DataFrame],
-        ) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                idf = pdf["term_id"].map(idf_map).to_numpy(dtype=np.float64)
-                tf = pdf["tf"].to_numpy(dtype=np.float64)
-                dl = pdf["dl"].to_numpy(dtype=np.float64)
-                if fw is not None:
-                    w_t, w_b = fw
-                    t1 = pdf["tf1"].to_numpy(dtype=np.float64)
-                    d1 = pdf["dl1"].to_numpy(dtype=np.float64)
-                    score = bm25f_score(
-                        t1, tf - t1, d1, dl - d1, idf, w_t, w_b,
-                        live_avgdl1, live_avgdlb, K1, B,
-                    )
-                else:
-                    score = bm25_score(tf, dl, idf, live_avgdl, K1, B)
+
+def _keep_docs(scored: DataFrame, doc_ids: DataFrame | None) -> DataFrame:
+    """Metadata filter as a broadcast semi-join BELOW the aggregation:
+    filtered-out docs never enter the per-doc sum or the top-k heaps."""
+    if doc_ids is None:
+        return scored
+    return scored.join(F.broadcast(doc_ids.select("doc_id")), "doc_id", "left_semi")
+
+
+def _decode_score_df(
+    probe: DataFrame,
+    kernel: _Kernel,
+    idfs: dict[int, float],
+    ranks: dict[int, int],
+    theta: float = 0.0,
+    other_max: dict[int, float] | None = None,
+) -> DataFrame:
+    """mapInPandas: blob rows -> (doc_id, rank, score) with block-max
+    skipping. other_max[t] = sum of the term bounds of the OTHER query
+    terms; theta 0 decodes every block."""
+    other_max = other_max or {}
+
+    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            out_doc, out_rank, out_score = [], [], []
+            for row in pdf.itertuples(index=False):
+                tid = int(row.term_id)
+                idf = idfs[tid]
+                keep = None  # decode all blocks
+                if theta > 0.0:
+                    # prune against theta RELAXED by the 6-dp rounding
+                    # quantum: the final top-k orders by round(score, 6),
+                    # so a doc whose raw total sits within 5e-7 below
+                    # theta can round-TIE the kth score and win the
+                    # doc_id tiebreak — pruning it would diverge from the
+                    # oracle exactly at the tie boundaries the rounded
+                    # ordering was introduced to stabilize
+                    bm = kernel.block_bound(idf, row)
+                    keep = bm + other_max.get(tid, 0.0) >= theta - 5e-7
+                    if not keep.any():
+                        continue
+                d, *cols = kernel.decode(row, keep)
+                out_doc.append(d)
+                out_rank.append(np.full(len(d), ranks[tid], dtype=np.int64))
+                out_score.append(kernel.score(idf, *cols))
+            if out_doc:
                 yield pd.DataFrame(
                     {
-                        "doc_id": pdf["doc_id"].to_numpy(),
-                        "rank": pdf["term_id"].map(rank_map).to_numpy(
-                            dtype=np.int64
-                        ),
-                        "score": score,
+                        "doc_id": np.concatenate(out_doc),
+                        "rank": np.concatenate(out_rank),
+                        "score": np.concatenate(out_score),
                     }
                 )
 
-        return (
-            rows.filter(F.col("term_id").isin(tids))
-            .select(*score_cols)
-            .mapInPandas(
-                score_rows, schema="doc_id long, rank long, score double"
+    return probe.select(*kernel.blob_cols).mapInPandas(
+        decode, schema="doc_id long, rank long, score double"
+    )
+
+
+def _score_delta_rows(
+    rows: DataFrame,
+    kernel: _Kernel,
+    idfs: dict[int, float],
+    ranks: dict[int, int],
+) -> DataFrame:
+    """Latest-wins delta rows -> (doc_id, rank, score), same kernel as the
+    base decode."""
+
+    def score_rows(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            cols = [pdf[c].to_numpy(dtype=np.float64) for c in kernel.score_cols]
+            idf = pdf["term_id"].map(idfs).to_numpy(dtype=np.float64)
+            yield pd.DataFrame(
+                {
+                    "doc_id": pdf["doc_id"].to_numpy(),
+                    "rank": pdf["term_id"].map(ranks).to_numpy(dtype=np.int64),
+                    "score": kernel.score(idf, *cols),
+                }
             )
+
+    return rows.select("term_id", "doc_id", *kernel.score_cols).mapInPandas(
+        score_rows, schema="doc_id long, rank long, score double"
+    )
+
+
+def _scored(
+    view: _View,
+    kernel: _Kernel,
+    idfs: dict[int, float],
+    ranks: dict[int, int],
+    theta: float = 0.0,
+    other_max: dict[int, float] | None = None,
+    term: int | None = None,
+) -> DataFrame:
+    """(doc_id, rank, score) partials of the view's bound terms (or of
+    the one ``term``): the base blob decode, minus docs a delta version
+    supersedes (latest version wins — a broadcast anti-join on the tiny
+    delta doc set), plus the scored delta rows. Delta rows are small by
+    construction and always score."""
+    probe, delta = view.probe, view.delta_rows
+    if term is not None:
+        probe = probe.filter(F.col("term_id") == term)
+        if delta is not None:
+            delta = delta.filter(F.col("term_id") == term)
+    scored = _decode_score_df(probe, kernel, idfs, ranks, theta, other_max)
+    if view.superseded is None:
+        return scored
+    return scored.join(
+        F.broadcast(view.superseded), "doc_id", "left_anti"
+    ).unionByName(_score_delta_rows(delta, kernel, idfs, ranks))
+
+
+def _sketch_theta(
+    sketch: dict[int, tuple],
+    kernel: _Kernel,
+    term_ids: list[int],
+    idfs: dict[int, float],
+    k: int,
+) -> float:
+    """Driver-side theta from the hot-term sketches: accumulate ACHIEVED
+    partial sums per doc over every query term's stored real postings
+    (live idf/avgdl, the same kernel the decode scores with — the sketch
+    stores the real (tf1, dl1) channel), take the kth largest. Zero
+    Spark jobs.
+
+    Safe: each stored (doc, tf, dl) is a real posting, so each per-doc
+    sum is ≤ that doc's true total score; k distinct docs achieving
+    ≥ theta ⇒ the true kth top-k score ≥ theta."""
+    acc: dict[int, float] = {}
+    for tid in term_ids:
+        hb = sketch.get(tid)
+        if hb is None:
+            continue
+        d, tf, dl, tf1, dl1 = hb
+        score = kernel.score(idfs[tid], tf, dl, tf1, dl1)
+        for doc, sc in zip(d.tolist(), score.tolist()):
+            acc[doc] = acc.get(doc, 0.0) + sc
+    if len(acc) < k:
+        return 0.0
+    return heapq.nlargest(k, acc.values())[-1]
+
+
+def _theta(
+    view: _View,
+    kernel: _Kernel,
+    idfs: dict[int, float],
+    ranks: dict[int, int],
+    k: int,
+    doc_ids: DataFrame | None,
+) -> float:
+    """The WAND threshold: the kth-best achieved score among real
+    postings, a safe lower bound on the true kth top-k total.
+
+    The sketch serves unfiltered queries for free. The distributed pass —
+    kth-best score among the RAREST term's postings, orderBy(desc)
+    .limit(k) (TakeOrderedAndProject, per-partition heaps; no blobs reach
+    the driver) — runs only when the sketch cannot stand in for it: the
+    rarest term is unsketched (always so in a view without sketches; a
+    cold term's list is bounded by salt_threshold, so the pass is cheap
+    and usually tighter), or a ``doc_ids`` filter is set — the sketch
+    ignores the filter, so its kth score could exceed the kth FILTERED
+    score and over-prune; the pass applies the same semi-join as the
+    final top-k."""
+    term_ids = sorted(view.bound)
+    rarest = min(term_ids, key=lambda t: (view.bound[t]["df"], t))
+    theta = 0.0
+    if doc_ids is None:
+        theta = _sketch_theta(view.sketch, kernel, term_ids, idfs, k)
+        if rarest in view.sketch:
+            return theta
+    top = (
+        _keep_docs(_scored(view, kernel, idfs, ranks, term=rarest), doc_ids)
+        .select("score")
+        .orderBy(F.desc("score"))
+        .limit(k)
+        .collect()
+    )
+    return max(theta, float(top[-1]["score"]) if len(top) == k else 0.0)
+
+
+def _ordered_sum(partials: DataFrame, keys: list[str]) -> DataFrame:
+    """(keys..., rank, score) partials -> (keys..., score, n_terms): the
+    per-group float sum in rank order (build-independent, oracle-bit-equal
+    — see _term_ranks) and the number of terms that matched."""
+    return (
+        partials.groupBy(*keys)
+        .agg(F.sort_array(F.collect_list(F.struct("rank", "score"))).alias("parts"))
+        .select(
+            *keys,
+            F.aggregate(
+                "parts", F.lit(0.0), lambda acc, x: acc + x["score"]
+            ).alias("score"),
+            F.size("parts").alias("n_terms"),
         )
+    )
 
-    def _scored_union(
-        tids: list[int], theta: float, other_max: dict[int, float]
-    ) -> DataFrame:
-        base = _decode_score_df(
-            index,
-            probe.filter(F.col("term_id").isin(tids)),
-            idfs, theta, other_max, ranks,
-            field_weights=fw, stats=live_stats,
-        ).join(F.broadcast(snap["delta_doc_ids"]), "doc_id", "left_anti")
-        return base.unionByName(_score_delta(delta_rows, tids))
 
+def _plan_topk(
+    index: SearchIndex,
+    view: _View | None,
+    k: int,
+    mode: str,
+    use_wand: bool,
+    field_weights: tuple[float, float] | None,
+    doc_ids: DataFrame | None,
+) -> DataFrame:
+    """The planner: idf → term bounds → theta → scored partials → ordered
+    per-doc sum → top-k over one snapshot view (None: nothing bound).
+    WAND prunes multi-term OR queries only: a single term has no other
+    terms to bound against, and AND needs every term's contribution."""
+    if view is None:
+        return index.spark.createDataFrame([], "doc_id long, score double")
+    term_ids = sorted(view.bound)
+    idfs = view.idfs()
+    ranks = _term_ranks(view.bound)
+    kernel = _Kernel(view.stats, field_weights)
     theta = 0.0
     other_max: dict[int, float] = {}
     if use_wand and len(term_ids) > 1 and mode == "OR":
-        # per-term upper bound under LIVE stats: raw extrema over base
-        # metadata ∪ delta rows, scored with live idf/avgdl
-        maxes = {}
-        for tid in term_ids:
-            mt, mds = 0, []
-            if tid in meta:
-                _, bmt, bmd = meta[tid]
-                mt = max(mt, bmt)
-                mds.append(bmd)
-            if tid in dstats:
-                _, dmt, dmd = dstats[tid]
-                mt = max(mt, dmt)
-                mds.append(dmd)
-            md = min(mds) if mds else 1
-            if mt <= 0:
-                maxes[tid] = 0.0
-            elif fw is not None:
-                maxes[tid] = _weighted_term_bound(float(mt), idfs[tid], fw)
-            else:
-                maxes[tid] = float(
-                    bm25_score(
-                        np.array([float(mt)]), np.array([float(md)]),
-                        idfs[tid], avgdl, K1, B,
-                    )[0]
-                )
-        other_max = {
-            tid: sum(v for t2, v in maxes.items() if t2 != tid)
-            for tid in term_ids
-        }
-        # theta: kth-best LIVE score among the rarest term's union rows —
-        # the safe lower bound on the kth top-k total (the filtered
-        # variant applies the same semi-join the final top-k does)
-        rarest = min(term_ids, key=lambda t: (live_df[t], t))
-        theta_rows = _scored_union([rarest], 0.0, {})
-        if doc_ids is not None:
-            theta_rows = theta_rows.join(
-                F.broadcast(doc_ids.select("doc_id")), "doc_id", "left_semi"
+        maxes = {
+            t: kernel.term_bound(
+                idfs[t], view.bound[t]["max_tf"], view.bound[t]["min_dl"]
             )
-        top = (
-            theta_rows.select("score")
-            .orderBy(F.desc("score"))
-            .limit(k)
-            .collect()
-        )
-        theta = float(top[-1]["score"]) if len(top) == k else 0.0
+            for t in term_ids
+        }
+        other_max = {
+            t: sum(v for t2, v in maxes.items() if t2 != t) for t in term_ids
+        }
+        theta = _theta(view, kernel, idfs, ranks, k, doc_ids)
+    scored = _scored(view, kernel, idfs, ranks, theta, other_max)
+    total = _ordered_sum(_keep_docs(scored, doc_ids), ["doc_id"])
+    if mode == "AND":
+        total = total.filter(F.col("n_terms") == len(term_ids))
+    return (
+        total.select("doc_id", "score")
+        .orderBy(F.desc(F.round("score", 6)), F.asc("doc_id"))
+        .limit(k)
+    )
 
-    scored = _scored_union(term_ids, theta, other_max)
-    if doc_ids is not None:
-        scored = scored.join(
-            F.broadcast(doc_ids.select("doc_id")), "doc_id", "left_semi"
-        )
-    return _sum_topk(scored, len(term_ids), mode, k)
+
+def search(
+    index: SearchIndex,
+    query: str | list[str],
+    k: int = 10,
+    mode: str = "OR",
+    use_wand: bool = True,
+    field_weights: tuple[float, float] | None = None,
+    doc_ids: DataFrame | None = None,
+) -> DataFrame:
+    """-> DataFrame(doc_id, score) top-k over the BASE snapshot, ordered
+    (score desc, doc_id asc).
+
+    mode="OR": reference union semantics. mode="AND": posting-list
+    intersection (north rule).
+
+    field_weights=(w_title, w_body): TRUE BM25F scoring (_Kernel) over the
+    postings' (tf1, dl1) field channel. The reference scores every search
+    with per-field weights (app.py:75-92,679-725); idf stays
+    corpus-global (per the literature), mirrored by the declarative
+    bm25f_topk oracle.
+
+    doc_ids: optional DataFrame with a doc_id column — a metadata filter
+    (reference app.py:407-497 composes location/class filters inside the
+    query) applied as a broadcast semi-join BELOW scoring, with the WAND
+    theta estimated on the FILTERED candidate set. Term stats stay
+    corpus-global, like the reference.
+
+    Top-k ordering key is the 6-dp ROUNDED score (doc_id tiebreak) — the
+    same key every declarative/DuckDB oracle orders by — while the
+    returned ``score`` column stays the raw float64 (bit-equal to the
+    single-node oracle). Ordering by the raw float would let two docs
+    whose scores round equal straddle rank k differently across
+    engines."""
+    index.check_epoch()
+    view = _base_view(index, index.bind_terms(query))
+    return _plan_topk(index, view, k, mode, use_wand, field_weights, doc_ids)
+
+
+def search_uncompacted(
+    index: SearchIndex,
+    query: str,
+    k: int = 10,
+    mode: str = "OR",
+    field_weights: tuple[float, float] | None = None,
+    doc_ids: DataFrame | None = None,
+    use_wand: bool = True,
+) -> DataFrame:
+    """BM25 term search over the UNION corpus (base ∪ un-compacted ingest
+    deltas) — the term-side twin of search_phrase's union snapshot,
+    closing the freshness asymmetry where term queries served exactly the
+    base snapshot until compact(). With no pending deltas it serves the
+    base view, like search().
+
+    Exactness: every stat is live (_union_view) and every posting is
+    scored by the same kernel the compacted decode uses — so results are
+    bit-equal to compact() + search() (tests/test_streaming).
+
+    Cost model: uncompacted_snapshot's corpus-stats fold, the union
+    lexicon bind, ONE tiny per-term stats job and — for multi-term OR
+    with WAND — the rarest-term theta pass buy block skipping on the
+    dominant base decode (there is no sketch: its base-stats scores do
+    not hold under live stats). compact() restores the sketch-served
+    zero-job path.
+
+    Corner: a term whose postings are ALL tombstoned but not yet
+    compacted still binds here (df 0, contributes no rows); in AND mode
+    it empties the result until compact() drops its postings — the
+    conservative reading of an in-flux corpus."""
+    index.check_epoch()
+    from search_engine_spark.streaming.incremental import uncompacted_snapshot
+
+    snap = uncompacted_snapshot(index.spark, index.paths)
+    if snap is None:
+        view = _base_view(index, index.bind_terms(query))
+    else:
+        view = _union_view(index, snap, query)
+    return _plan_topk(index, view, k, mode, use_wand, field_weights, doc_ids)
 
 
 def search_phrase(
@@ -1314,16 +1173,8 @@ def index_stats(index: SearchIndex) -> DataFrame:
     numbers per build STEP live in the manifest (per-partition lineage);
     this is the live-table view."""
     index.check_epoch()
-    # legacy (pre-field-channel) barrels lack tf1s/dls1 — include only
-    # the columns this index actually has (decode_postings_rows applies
-    # the same gate)
-    blob_cols = [
-        c
-        for c in ("doc_deltas", "tfs", "dls", "tf1s", "dls1")
-        if c in index.postings.columns
-    ]
     blob_bytes = sum(
-        [F.coalesce(F.octet_length(c), F.lit(0)) for c in blob_cols],
+        [F.octet_length(c) for c in ("doc_deltas", "tfs", "dls", "tf1s", "dls1")],
         F.lit(0),
     )
     p = index.postings.select(
@@ -1404,77 +1255,44 @@ def search_many(
     drive relevance evaluation, where per-query job scheduling (~0.5 s
     here) would otherwise dominate.
 
-    Plan: one barrel+term-pruned probe over the UNION of all queries'
-    terms, one decode pass emitting the per-(term, doc) partials keyed by
-    a dense union-term index (the decode's rank channel — dense, so no
-    term_id-width concerns), a broadcast fan-out join from term index to
-    (query_id, per-query rank) — a term shared by q queries costs q
-    mapped rows, never a re-decode — then the per-(query, doc) ordered
-    float sum and a per-query window top-k. WAND is skipped (a single
-    theta cannot serve q different queries; the workload's economics are
-    throughput, and the shared decode amortizes what pruning would have
-    saved); per-doc sums keep the same sorted-term-string order as
-    search(), so floats match bit-for-bit."""
+    Plan: the planner's base view over the UNION of all queries' terms —
+    one barrel+term-pruned probe, one decode pass emitting the per-(term,
+    doc) partials keyed by a dense union-term index (the decode's rank
+    channel), a broadcast fan-out join from term index to (query_id,
+    per-query rank) — a term shared by q queries costs q mapped rows,
+    never a re-decode — then the planner's ordered per-(query, doc) sum
+    and a per-query window top-k. WAND is skipped (a single theta cannot
+    serve q different queries; the workload's economics are throughput,
+    and the shared decode amortizes what pruning would have saved)."""
     from pyspark.sql import Window
 
     index.check_epoch()
     spark = index.spark
     out_schema = "query_id long, doc_id long, score double"
-    bound_by_q: dict[int, dict[int, dict]] = {
-        qid: index.bind_terms(text) for qid, text in queries.items()
-    }
-    union_terms = sorted({t for b in bound_by_q.values() for t in b})
-    if not union_terms:
+    bound_by_q = {qid: index.bind_terms(text) for qid, text in queries.items()}
+    view = _base_view(
+        index, {t: b for bq in bound_by_q.values() for t, b in bq.items()}
+    )
+    if view is None:
         return spark.createDataFrame([], out_schema)
-    dense = {tid: i for i, tid in enumerate(union_terms)}
-    idfs = {
-        tid: idf_value(
-            next(b[tid]["df"] for b in bound_by_q.values() if tid in b),
-            index.n_docs,
-        )
-        for tid in union_terms
-    }
-    probe = _probe(index, union_terms)
-    partials = _decode_score_df(index, probe, idfs, 0.0, {}, ranks=dense)
-    # term-index -> (query, per-query rank) fan-out; per-query rank is
-    # the term's position in THAT query's sorted-term-string order (the
-    # float-sum order search() uses)
-    fan = []
-    arity = {}
-    for qid, b in bound_by_q.items():
-        qranks = {
-            tid: i
-            for i, tid in enumerate(sorted(b, key=lambda t: b[t]["term"]))
-        }
-        arity[qid] = len(b)
-        fan.extend((dense[tid], qid, qranks[tid]) for tid in b)
-    if not fan:
-        return spark.createDataFrame([], out_schema)
-    fan_df = spark.createDataFrame(
-        fan, "rank long, query_id long, qrank int"
+    dense = {tid: i for i, tid in enumerate(sorted(view.bound))}
+    partials = _scored(view, _Kernel(view.stats, None), view.idfs(), dense)
+    # term-index -> (query, per-query rank): the per-query rank is the
+    # float-sum order search() uses for that query
+    fan = [
+        (dense[tid], qid, rank)
+        for qid, bq in bound_by_q.items()
+        for tid, rank in _term_ranks(bq).items()
+    ]
+    fan_df = spark.createDataFrame(fan, "dense long, query_id long, rank long")
+    per_q = partials.withColumnRenamed("rank", "dense").join(
+        F.broadcast(fan_df), "dense"
     )
-    per_q = partials.join(F.broadcast(fan_df), "rank").select(
-        "query_id", "doc_id", "qrank", "score"
-    )
-    summed = (
-        per_q.groupBy("query_id", "doc_id")
-        .agg(
-            F.sort_array(
-                F.collect_list(F.struct("qrank", "score"))
-            ).alias("parts")
-        )
-        .select(
-            "query_id",
-            "doc_id",
-            F.aggregate(
-                "parts", F.lit(0.0), lambda acc, x: acc + x["score"]
-            ).alias("score"),
-            F.size("parts").alias("n_terms"),
-        )
-    )
+    summed = _ordered_sum(per_q, ["query_id", "doc_id"])
     if mode == "AND":
         arity_df = spark.createDataFrame(
-            list(arity.items()), "query_id long, arity int"
+            [(qid, len(bq)) for qid, bq in bound_by_q.items()],
+            "query_id long, arity int",
         )
         summed = summed.join(F.broadcast(arity_df), "query_id").filter(
             F.col("n_terms") == F.col("arity")

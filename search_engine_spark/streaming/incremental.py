@@ -753,66 +753,29 @@ def apply_incremental_batch(
     }
 
 
-def _with_codec(postings: DataFrame) -> DataFrame:
-    """Normalize the per-row codec id for decode: absent column (pre-codec
-    barrels) -> varint(0); NULLs from an allowMissingColumns union of old
-    and new rows -> varint(0). Mirrors ib.read_postings."""
-    if "codec" not in postings.columns:
-        return postings.withColumn("codec", F.lit(0).cast("int"))
-    return postings.withColumn(
-        "codec", F.coalesce(F.col("codec"), F.lit(0)).cast("int")
-    )
-
-
 def decode_postings_rows(postings: DataFrame) -> DataFrame:
     """Inverse of encode: blob rows -> (term_id, doc_id, tf, tf1, dl, dl1)
-    rows. mapInPandas, numpy-vectorized decode (compression.py).
-    Pre-fields-channel barrels decode with tf1 = 0 (v1) / dl1 = 0 (v2) —
-    compacting an older index re-encodes it into the current layout."""
+    rows. mapInPandas, numpy-vectorized decode (compression.py)."""
     import numpy as np
     import pandas as pd
 
     from search_engine_spark.functions.compression import decode_posting_blocks
 
-    has_tf1 = "tf1s" in postings.columns
-    has_dl1 = "dls1" in postings.columns
-    postings = _with_codec(postings)
-    cols = list(ib.DECODE_BASE_COLS)
-    if has_tf1:
-        cols += ["tf1_lens", "tf1s"]
-    if has_dl1:
-        cols += ["dl1_lens", "dls1"]
-    postings = postings.select(*cols)  # prune theta/metadata columns
+    # prune theta/metadata columns below the Arrow boundary
+    postings = postings.select(
+        *ib.DECODE_BASE_COLS, "tf1_lens", "tf1s", "dl1_lens", "dls1"
+    )
 
     def decode(batches):
         for pdf in batches:
             tids, docs_, tfs, tf1s, dls, dl1s = [], [], [], [], [], []
             for row in pdf.itertuples(index=False):
-                out = decode_posting_blocks(
+                d, t, l, t1, d1 = decode_posting_blocks(
                     row.doc_deltas, row.tfs, row.dls,
                     row.db_lens, row.tf_lens, row.dl_lens, None,
-                    row.tf1s if has_tf1 else None,
-                    row.tf1_lens if has_tf1 else None,
-                    # a mixed barrel may carry NULL field streams on
-                    # rows that predate the channel (allowMissingColumns
-                    # back-fill) — decode them as absent
-                    (row.dls1 if row.dls1 is not None else None)
-                    if has_dl1 else None,
-                    (row.dl1_lens if row.dl1_lens is not None else None)
-                    if has_dl1 else None,
+                    row.tf1s, row.tf1_lens, row.dls1, row.dl1_lens,
                     codec=int(row.codec),
                 )
-                d, t, l = out[0], out[1], out[2]
-                i = 3
-                if has_tf1 and row.tf1s is not None:
-                    t1 = out[i]
-                    i += 1
-                else:
-                    t1 = np.zeros(len(d), dtype=np.int64)
-                if has_dl1 and row.dls1 is not None:
-                    d1 = out[i]
-                else:
-                    d1 = np.zeros(len(d), dtype=np.int64)
                 tids.append(np.full(len(d), int(row.term_id), dtype=np.int64))
                 docs_.append(d)
                 tfs.append(t)
@@ -848,9 +811,7 @@ def decode_docid_rows(postings: DataFrame) -> DataFrame:
 
     from search_engine_spark.functions.compression import decode_docids_blocks
 
-    postings = _with_codec(postings).select(
-        "term_id", "codec", "db_lens", "doc_deltas"
-    )
+    postings = postings.select("term_id", "codec", "db_lens", "doc_deltas")
 
     def decode(batches):
         for pdf in batches:
@@ -902,14 +863,20 @@ def compact(spark: SparkSession, paths: ib.IndexPaths) -> dict:
     if not os.path.exists(ddir) and not has_tomb:
         return {"compacted_barrels": 0}
     stats = ib.read_stats(spark, paths)
+    postings = ib.read_postings(spark, paths.postings)
+    # the re-encode and the decode below read the current format only
+    ib.check_format(
+        postings=postings.columns,
+        lexicon=spark.read.parquet(paths.lexicon).columns,
+        stats=list(stats),
+    )
     n_barrels = int(stats["n_barrels"])
     n_salts = int(stats["n_salts"])
     salt_threshold = int(stats["salt_threshold"])
-    # preserve the index's posting codec across compactions (recorded at
-    # build time; pre-codec stats rows -> varint) — like the spell
-    # artifact's recorded max_dist, the rewrite must not silently change
-    # the layout the index was built with
-    codec = int(stats.get("codec") or 0)
+    # preserve the index's posting codec across compactions — like the
+    # spell artifact's recorded max_dist, the rewrite must not silently
+    # change the layout the index was built with
+    codec = int(stats["codec"])
 
     deltas_seq = _read_deltas_with_seq(spark, paths, ddir)
     if deltas_seq is None:
@@ -927,7 +894,6 @@ def compact(spark: SparkSession, paths: ib.IndexPaths) -> dict:
     else:
         full_merge = False
 
-    postings = ib.read_postings(spark, paths.postings)
     if full_merge:
         # every barrel is affected: the purged doc's terms are anywhere
         affected_barrels = list(range(n_barrels))
@@ -1000,10 +966,7 @@ def compact(spark: SparkSession, paths: ib.IndexPaths) -> dict:
             "group", F.col("group").cast("int")
         )
 
-    # allowMissingColumns: untouched blobs from a pre-upgrade index may
-    # lack newer metadata columns (e.g. theta_tf1s) — they ride along as
-    # nulls; readers coalesce (build_hot_bounds) or prune (decode) them
-    merged = base_untouched.unionByName(re_encoded, allowMissingColumns=True)
+    merged = base_untouched.unionByName(re_encoded)
 
     # 6. refreshed lexicon: base ∪ uncompacted batch extensions, with
     # absolute df/cf recount from the merged rows (no additive drift).
@@ -1148,9 +1111,7 @@ def compact(spark: SparkSession, paths: ib.IndexPaths) -> dict:
         untouched_barrels = ib.read_postings(spark, paths.postings).filter(
             ~F.col("barrel").isin(affected_barrels)
         )
-        new_postings = new_postings.unionByName(
-            untouched_barrels, allowMissingColumns=True
-        )
+        new_postings = new_postings.unionByName(untouched_barrels)
     hb = ib.build_hot_bounds(new_postings, salt_threshold)
     hb_staging = f"{paths.hot_bounds}_staging"
     hb.write.mode("overwrite").parquet(hb_staging)

@@ -39,7 +39,7 @@ def test_weighted_sketch_theta_engages_and_is_safe(spark_index, oracle_index):
     theta lower-bounds the true kth weighted score (safety invariant),
     and the end-to-end weighted top-k stays bit-equal to the oracle."""
     from search_engine_spark.operators.index_build import idf_value
-    from search_engine_spark.operators.query import _sketch_theta
+    from search_engine_spark.operators.query import _Kernel, _sketch_theta
 
     idx = spark_index
     query = "best western good"  # Zipf-head terms, salted at threshold 60
@@ -50,7 +50,8 @@ def test_weighted_sketch_theta_engages_and_is_safe(spark_index, oracle_index):
         idx.hot_bounds[t][3] is not None for t in hot
     ), "sketches must carry the tf1 channel"
     idfs = {t: idf_value(b["df"], idx.n_docs) for t, b in bound.items()}
-    theta = _sketch_theta(idx, sorted(bound), idfs, 10, field_weights=FW)
+    kernel = _Kernel((idx.avgdl, idx.avgdl1, idx.avgdlb), FW)
+    theta = _sketch_theta(idx.hot_bounds, kernel, sorted(bound), idfs, 10)
     assert theta > 0.0
     got = search_topk(idx, query, k=10, field_weights=FW)
     want = oracle.search(oracle_index, query, k=10, field_weights=FW)
@@ -63,8 +64,7 @@ def test_weighted_sketch_theta_engages_and_is_safe(spark_index, oracle_index):
 
 def test_body_upweighted_lossless_and_matches_oracle(spark_index, oracle_index):
     """The w_title < w_body orientation rides the same sketch path now
-    that the sketch stores the REAL (tf1, dl1) channel (pre-upgrade rows
-    carry NULLs and are skipped, never zero-filled) — WAND must stay
+    that the sketch stores the REAL (tf1, dl1) channel — WAND must stay
     lossless and the true-BM25F scores bit-equal to the oracle."""
     fw = (1.0, 2.0)
     a = search_topk(spark_index, "best western good", k=10, field_weights=fw)

@@ -185,3 +185,38 @@ def test_salted_term_query_merges_salts(spark, spark_index, oracle_index):
     want = oracle.search(oracle_index, "best", k=10)
     assert [d for d, _ in got] == [d for d, _ in want]
     assert [s for _, s in got] == [s for _, s in want]
+
+
+def test_lexicon_scan_binding_matches_dict(spark_index, monkeypatch):
+    """A lexicon above LOCAL_LEXICON_MAX_ROWS binds through a pushed-down
+    lexicon scan instead of the driver dict: same bindings (with the WAND
+    term bounds) and the same top-k."""
+    from search_engine_spark.operators import query as q
+
+    monkeypatch.setattr(q, "LOCAL_LEXICON_MAX_ROWS", 0)
+    scan = q.SearchIndex(spark_index.spark, spark_index.paths)
+    assert scan._local_lexicon is None
+    assert spark_index._local_lexicon is not None
+    for query in QUERY_SET + ["best w101 zzznotaterm", ["best", "w101"], ""]:
+        assert scan.bind_terms(query) == spark_index.bind_terms(query)
+        assert search_topk(scan, query, k=10) == search_topk(
+            spark_index, query, k=10
+        )
+
+
+def test_open_rejects_older_format(spark, spark_index, tmp_path):
+    """An index whose postings lack a current column (here the per-field
+    length stream dls1) is rejected when SearchIndex opens, and the error
+    names the column."""
+    import shutil
+
+    from search_engine_spark.operators.query import SearchIndex
+
+    root = tmp_path / "older"
+    shutil.copytree(spark_index.paths.root, root)
+    shutil.rmtree(root / "postings")
+    spark.read.parquet(spark_index.paths.postings).drop("dls1").write.partitionBy(
+        "barrel"
+    ).parquet(str(root / "postings"))
+    with pytest.raises(ValueError, match="dls1"):
+        SearchIndex(spark, ib.IndexPaths(str(root)))

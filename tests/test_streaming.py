@@ -432,9 +432,25 @@ def test_reingest_changed_page_tombstone_compaction(spark, tmp_path):
     fresh = SearchIndex(spark, fresh_paths)
     assert inc.n_docs == fresh.n_docs
     assert inc.avgdl == fresh.avgdl
-    for q in ["best western", "zzznew", "good well best", "updated content"]:
+    # a term whose every posting was tombstoned keeps its lexicon row with
+    # df 0 and max_tf 0 (no base postings: WAND bounds it at 0); paired
+    # with a live head term it must answer like the exhaustive decode and
+    # like the fresh build, where the term does not exist
+    from search_engine_spark.functions.text import normalize_text
+
+    dead = sorted(
+        r["term"]
+        for r in inc.lexicon.filter("df = 0 AND max_tf = 0").collect()
+        if normalize_text(r["term"]) == r["term"]
+    )
+    assert dead
+    for q in [
+        "best western", "zzznew", "good well best", "updated content",
+        f"{dead[0]} best",
+    ]:
         a = search_topk(inc, q, k=10)
         b = search_topk(fresh, q, k=10)
+        assert a == search_topk(inc, q, k=10, use_wand=False), q
         assert [d for d, _ in a] == [d for d, _ in b], q
         np.testing.assert_array_equal(
             np.array([s for _, s in a]), np.array([s for _, s in b])
